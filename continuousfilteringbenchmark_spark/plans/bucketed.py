@@ -22,9 +22,10 @@ This module removes token arrays from the shuffle entirely:
   n x n bucket grid. Pairs are shuffled BY CELL — two ids and a long per
   row, no arrays — and each cell task reads the two bucket files it needs
   straight from storage (local disk here; an object store on a real
-  cluster) and scores its pairs with the same vectorized numpy kernel as
-  the arrow engine. A per-worker LRU keeps hot buckets parsed across
-  tasks.
+  cluster) and scores its pairs with ``pipeline._score_batch``, the one
+  vectorized numpy kernel the arrow engine also runs, over ``_token_csr``
+  dictionaries of the two buckets. A per-worker LRU keeps hot buckets
+  parsed across tasks.
 
 Shuffle volume is therefore ``O(|pairs|)`` id rows — at the 2M-entity
 anchor that is ~25 GB of pair ids instead of ~150 GB of array payloads —
@@ -50,13 +51,14 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import tokenize as tk
-from .pipeline import _np_set_similarity
+from .pipeline import _score_batch, _token_csr
 
 _META_NAME = "_bucket_meta.json"
 
@@ -91,7 +93,9 @@ def write_token_buckets(
     before the write puts each bucket's rows in one task, so each bucket
     directory holds one file and a cell task's read is one contiguous
     columnar scan. Returns the meta dict it also persists next to the
-    data (consumed by ``score_pairs_bucketed`` at plan-build time)."""
+    data (consumed by ``score_pairs_bucketed`` at plan-build time); its
+    fresh ``generation`` id tells this write apart from any earlier store
+    at the same path."""
     hashed = tokened.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         tk.hash_token_set(F.col("tokens")).alias("_h"),
@@ -102,7 +106,7 @@ def write_token_buckets(
         .mode("overwrite")
         .parquet(path)
     )
-    meta = {"n_buckets": int(n_buckets), "version": 1}
+    meta = {"n_buckets": int(n_buckets), "version": 1, "generation": uuid.uuid4().hex}
     with open(os.path.join(path, _META_NAME), "w") as f:
         json.dump(meta, f)
     return meta
@@ -113,114 +117,30 @@ def read_meta(path: str) -> dict:
         return json.load(f)
 
 
-def _load_bucket(path: str, bucket: int, cache_max: int = _BUCKET_CACHE_MAX):
-    """(pd.Index ids, int64 offsets, int64 flat tokens) of one bucket,
-    LRU-cached per worker process. A bucket no doc hashed into has no
-    directory — that is the empty dictionary, not an error."""
-    import numpy as np
-    import pandas as pd
+def _load_bucket(path: str, generation: str | None, bucket: int, max_entries: int):
+    """The ``_token_csr`` dictionary of one bucket, LRU-cached per worker
+    process under the store's generation id, so a store rewritten at the
+    same path is never served from the cache. A bucket no doc hashed into
+    has no directory — that is the empty dictionary, not an error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    key = (path, bucket)
+    key = (path, generation, bucket)
     hit = _bucket_cache.get(key)
     if hit is not None:
         _bucket_cache.move_to_end(key)
         return hit
     dirp = os.path.join(path, f"bucket={bucket}")
-    if not os.path.isdir(dirp):
-        entry = (
-            pd.Index([], dtype=object),
-            np.zeros(1, dtype=np.int64),
-            np.empty(0, dtype=np.int64),
-        )
+    if os.path.isdir(dirp):
+        table = pq.read_table(dirp, columns=["doc_id", "_h"])
     else:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(dirp, columns=["doc_id", "_h"])
-        ids = pd.Index(t.column("doc_id").to_pandas())
-        col = t.column("_h").combine_chunks()
-        if col.null_count == 0:
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            offsets = col.offsets.to_numpy().astype(np.int64, copy=False)
-        else:  # defensive: null token arrays behave as empty sets
-            arrs = [
-                np.asarray(a if a is not None else (), dtype=np.int64)
-                for a in col.to_pylist()
-            ]
-            lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=len(arrs))
-            offsets = np.zeros(len(arrs) + 1, dtype=np.int64)
-            np.cumsum(lens, out=offsets[1:])
-            flat = (
-                np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-            )
-        entry = (ids, offsets, flat)
-    _bucket_cache[key] = entry
-    while len(_bucket_cache) > cache_max:
+        table = pa.table(
+            {"doc_id": pa.array([], pa.string()), "_h": pa.array([], pa.list_(pa.int64()))}
+        )
+    entry = _bucket_cache[key] = _token_csr(table)
+    while len(_bucket_cache) > max_entries:
         _bucket_cache.popitem(last=False)
     return entry
-
-
-def _score_chunk(lv, rv, lbuc, rbuc, sim, min_score):
-    """Score one chunk of a cell's pairs against the two parsed buckets.
-    Same math as the arrow engine's sort kernel: vectorized gather of both
-    sides' sorted hashed-token runs, per-batch dense token ranks, one
-    single-key sort, adjacent-duplicate count = intersection size."""
-    import numpy as np
-
-    lids, loff, lflat = lbuc
-    rids, roff, rflat = rbuc
-    li = lids.get_indexer(lv)
-    ri = rids.get_indexer(rv)
-    # pairs whose doc_id is absent from the token store are dropped —
-    # identical to the jvm engine's inner-join semantics
-    present = (li >= 0) & (ri >= 0)
-    if not present.all():
-        lv, rv, li, ri = lv[present], rv[present], li[present], ri[present]
-    n = len(lv)
-    if n == 0:
-        return None
-    llen, rlen = np.diff(loff), np.diff(roff)
-    lsz, rsz = llen[li], rlen[ri]
-    if min_score is not None:
-        # exact upper bound: score is maximal at c = min(|A|,|B|)
-        m = np.minimum(lsz, rsz).astype(np.float64)
-        keep = (
-            _np_set_similarity(
-                m, lsz.astype(np.float64), rsz.astype(np.float64), sim
-            )
-            >= min_score
-        )
-        if not keep.all():
-            lv, rv, li, ri = lv[keep], rv[keep], li[keep], ri[keep]
-            lsz, rsz = lsz[keep], rsz[keep]
-            n = len(lv)
-            if n == 0:
-                return None
-
-    def gather(idx, sizes, off, flat):
-        cl = np.cumsum(sizes)
-        total = int(cl[-1]) if n else 0
-        within = np.arange(total, dtype=np.int64) - np.repeat(cl - sizes, sizes)
-        return flat[np.repeat(off[idx], sizes) + within]
-
-    toks = np.concatenate([gather(li, lsz, loff, lflat), gather(ri, rsz, roff, rflat)])
-    pid = np.concatenate([np.repeat(np.arange(n), lsz), np.repeat(np.arange(n), rsz)])
-    _, ranks = np.unique(toks, return_inverse=True)
-    v = int(ranks.max()) + 1 if ranks.size else 1
-    key = pid * v + ranks
-    if n * v < 2**31:
-        key = key.astype(np.int32)
-    key.sort()
-    dup = key[1:] == key[:-1]
-    common = np.bincount((key[1:][dup] // v).astype(np.int64), minlength=n)
-    score = _np_set_similarity(
-        common.astype(np.float64), lsz.astype(np.float64), rsz.astype(np.float64), sim
-    )
-    if min_score is not None:
-        keep = score >= min_score
-        lv, rv, score = lv[keep], rv[keep], score[keep]
-    return lv, rv, score
 
 
 def score_pairs_bucketed(
@@ -228,8 +148,6 @@ def score_pairs_bucketed(
     bucket_path: str,
     sim: str = "jaccard",
     min_score: float | None = None,
-    kernel_chunk: int | None = None,
-    cache_max: int | None = None,
 ) -> DataFrame:
     """Score candidate (left_id, right_id) pairs against a
     ``write_token_buckets`` store with NO token bytes in any shuffle.
@@ -239,52 +157,36 @@ def score_pairs_bucketed(
     (left_id, right_id, _cell) rows by cell — and the token store never
     appears in the plan at all; cell tasks read their two bucket files
     side-band, the bucket-wise analogue of a broadcast that needs no
-    driver collect and no size cap. Output schema and score bits are
-    identical to ``score_pairs``'s engines on the same input.
+    driver collect and no size cap. Each cell scores its pairs in chunks
+    of ``_KERNEL_CHUNK`` through ``pipeline._score_batch``, the arrow
+    engine's kernel, so output schema and score bits are identical to
+    ``score_pairs``'s engines on the same input.
     """
-    n = int(read_meta(bucket_path)["n_buckets"])
+    meta = read_meta(bucket_path)
+    n, generation = int(meta["n_buckets"]), meta.get("generation")
     out_schema = "left_id string, right_id string, score double"
     path = bucket_path
     # resolved at PLAN-BUILD time so the values ride into the closure by
     # value (module globals would re-resolve on the worker's own import)
-    chunk = int(kernel_chunk or _KERNEL_CHUNK)
-    cmax = int(cache_max or _BUCKET_CACHE_MAX)
+    chunk, max_entries = _KERNEL_CHUNK, _BUCKET_CACHE_MAX
 
     def score_cell(key, pdf):
-        import numpy as np
         import pandas as pd
 
-        cell = int(key[0])
-        lb, rb = divmod(cell, n)
-        lbuc = _load_bucket(path, lb, cmax)
-        rbuc = lbuc if rb == lb else _load_bucket(path, rb, cmax)
-        outs = []
-        lvals = pdf["left_id"].values
-        rvals = pdf["right_id"].values
-        for lo in range(0, len(pdf), chunk):
-            res = _score_chunk(
-                lvals[lo : lo + chunk],
-                rvals[lo : lo + chunk],
-                lbuc,
-                rbuc,
-                sim,
-                min_score,
+        lb, rb = divmod(int(key[0]), n)
+        left = _load_bucket(path, generation, lb, max_entries)
+        right = _load_bucket(path, generation, rb, max_entries)
+        lvals, rvals = pdf["left_id"].values, pdf["right_id"].values
+        parts = (
+            _score_batch(
+                lvals[lo : lo + chunk], rvals[lo : lo + chunk], left, right, sim, min_score
             )
-            if res is not None:
-                outs.append(
-                    pd.DataFrame(
-                        {"left_id": res[0], "right_id": res[1], "score": res[2]}
-                    )
-                )
-        if not outs:
-            return pd.DataFrame(
-                {
-                    "left_id": np.empty(0, dtype=object),
-                    "right_id": np.empty(0, dtype=object),
-                    "score": np.empty(0, dtype=np.float64),
-                }
-            )
-        return pd.concat(outs, ignore_index=True)
+            for lo in range(0, len(pdf), chunk)
+        )
+        return pd.concat(
+            (pd.DataFrame({"left_id": lv, "right_id": rv, "score": sc}) for lv, rv, sc in parts),
+            ignore_index=True,
+        )
 
     cells = pairs.select(
         F.col("left_id").cast("string").alias("left_id"),

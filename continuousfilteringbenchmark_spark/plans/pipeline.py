@@ -17,8 +17,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from ..datamodel import agg_text
 from ..functions import tokenize as tk
@@ -61,8 +63,7 @@ def _np_set_similarity(c, a, b, kind: str):
     same IEEE-double expression over exact integer operands, so scores are
     bit-identical to the SQL path (int->double is exact below 2^53; +,*,/ and
     sqrt are correctly rounded in both runtimes)."""
-    import numpy as np
-
+    c, a, b = (np.asarray(x, dtype=np.float64) for x in (c, a, b))
     if kind == "cosine":
         return c / np.sqrt(a * b)
     if kind == "dice":
@@ -72,9 +73,9 @@ def _np_set_similarity(c, a, b, kind: str):
     raise ValueError(f"unknown similarity {kind!r}")
 
 
-# bitset-kernel caps (see _score_pairs_arrow): max 64-bit words per doc
-# (vocabulary <= 4096) and max bitset-buffer bytes; tests override these
-# to force each kernel
+# bitset-kernel caps (see _bitset): max 64-bit words per doc (vocabulary
+# <= 4096) and max bitset-buffer bytes; tests override these to force
+# each kernel
 _BITSET_MAX_WORDS = 64
 _BITSET_MAX_BYTES = 256 * 1024 * 1024
 # broadcast-dictionary budget in BYTES (8 B per hashed token + per-doc id
@@ -82,6 +83,8 @@ _BITSET_MAX_BYTES = 256 * 1024 * 1024
 # ~ 800+ MB on the driver
 _DICT_MAX_BYTES = 256 * 1024 * 1024
 _DICT_DOC_OVERHEAD = 48  # id string + offset slot per doc, estimated
+# set bits per byte value: the bitset kernel's popcount table
+_POPCNT = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
 # token-table probe results keyed by (applicationId, semanticHash(hashed),
 # cap): repeated score_pairs constructions over the same token table (bench
@@ -89,15 +92,10 @@ _DICT_DOC_OVERHEAD = 48  # id string + offset slot per doc, estimated
 # FIFO-bounded (a long session scoring many distinct tables must not grow
 # it without bound). Staleness note: the key is the PLAN, not the data — if
 # files under an identical plan grow between calls the stats undershoot;
-# the collect in _score_pairs_arrow is therefore independently bounded by
-# max_rows, so a stale 'under cap' can never trigger an unbounded collect.
+# _collect_dictionary is therefore independently bounded by max_rows, so a
+# stale 'under cap' can never trigger an unbounded collect.
 _probe_cache: dict[tuple, dict] = {}
 _PROBE_CACHE_MAX = 64
-
-# sentinel: _score_pairs_arrow found the COLLECTED dictionary over its
-# row/byte caps (vs None = only the bitset caps failed). Distinguishes
-# "table proven too big to broadcast" from "dictionary fine, kernel not".
-_OVER_CAP = object()
 
 
 def _token_stats(hashed: DataFrame, cap: int) -> dict:
@@ -107,8 +105,8 @@ def _token_stats(hashed: DataFrame, cap: int) -> dict:
     re-constructions are free: the file-set component means the common
     growth mode — new files appended under the same path, identical plan —
     re-probes instead of serving stale (undershooting) stats. In-place file
-    rewrites still alias to the old entry; the arrow path re-checks its
-    caps on the actual collect regardless (``_OVER_CAP``)."""
+    rewrites still alias to the old entry; ``_collect_dictionary`` re-checks
+    the caps on the actual collect regardless."""
     try:
         files_sig = hash(tuple(sorted(hashed.inputFiles())))
     except Exception:
@@ -146,103 +144,113 @@ def _token_stats(hashed: DataFrame, cap: int) -> dict:
     return stats
 
 
-def _score_pairs_arrow(
-    pairs: DataFrame,
-    hashed: DataFrame,
-    sim: str,
-    min_score: float | None,
-    allow_sort: bool = True,
-    max_rows: int | None = None,
-    strict: bool = False,
-) -> DataFrame | None:
-    """Arrow-batched pair scorer over a broadcast token dictionary.
+def _token_csr(table):
+    """A (doc_id, _h) Arrow token table as the scorers' dictionary
+    ``(pd.Index ids, int64 offsets, int64 flat)``: doc ``i``'s hashed
+    tokens are ``flat[offsets[i]:offsets[i + 1]]``. A null token array is
+    the empty set."""
+    import pandas as pd
+    import pyarrow.compute as pc
 
-    The token table is collected once (caller gates on the row/byte caps)
-    into three flat numpy arrays (ids, concatenated token ids, offsets) and
-    broadcast to the python workers; only (left_id, right_id) crosses Arrow.
-    Per batch the intersection counts are computed fully vectorized: gather
-    both sides' hashed-token runs, lexsort by (pair, token), count adjacent
-    duplicates (each side is a set, so a duplicate == one common token).
-    No per-row python — the batch cost is two numpy sort passes over the
-    batch's tokens (north rule: "vectorized pandas/Arrow UDFs computing
-    batched Jaccard ... scores", no per-row Python).
+    col = table.column(1).combine_chunks()
+    offsets = np.zeros(len(col) + 1, dtype=np.int64)
+    np.cumsum(pc.list_value_length(col).fill_null(0).to_numpy(), out=offsets[1:])
+    # flatten() skips the values behind null lists, matching their length 0
+    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    return pd.Index(table.column(0).to_pandas()), offsets, flat
 
-    Pairs referencing a doc_id absent from the token table are DROPPED —
-    the same semantics as the jvm engine's inner join (engine choice can
-    never change the result).
 
-    ``allow_sort=False``: if the exact vocabulary busts the bitset caps,
-    return None instead of falling back to the sort kernel — the caller
-    (auto routing) then builds the jvm plan, which beats the sort kernel
-    on large vocabularies.
+def _runs(flat, offsets, idx, sizes):
+    """The token runs of docs ``idx`` (of lengths ``sizes``), concatenated."""
+    ends = np.cumsum(sizes)
+    return flat[np.arange(sizes.sum()) + np.repeat(offsets[idx] - ends + sizes, sizes)]
 
-    ``max_rows``: when set, the dictionary collect is itself bounded to
-    ``max_rows + 1`` rows and the byte cap is re-checked on the ACTUAL
-    collected sizes — the probe stats that routed here are cached per plan
-    and can undershoot if the underlying files grew, so the caps are
-    enforced again on ground truth. On a bust: return ``_OVER_CAP`` when
-    ``strict=False`` (auto falls back to the jvm join AND must clear any
-    broadcast hint — the table is proven over the cap), raise when
-    ``strict=True`` (the caller explicitly demanded arrow under a cap).
-    A plain ``None`` return means only the bitset caps failed — the
-    dictionary itself fit, so the table is still safely broadcastable.
-    """
-    import numpy as np
+
+def _score_batch(lv, rv, left, right, sim, min_score, bits=None):
+    """Exact set similarity of one batch of (left_id, right_id) pairs whose
+    tokens live in the ``_token_csr`` dictionaries ``left`` and ``right``;
+    returns the surviving (left ids, right ids, scores). Vectorized numpy
+    throughout, no per-row python (north rule).
+
+    Pairs with an id absent from its dictionary are dropped — the jvm
+    engine's inner-join semantics, so the engine never changes the result.
+    With ``min_score`` an exact size bound (the score is maximal at
+    c = min(|A|, |B|)) prunes pairs before any intersection work, and only
+    scores >= min_score are returned. Common tokens are counted by popcount
+    when ``bits`` holds per-doc bitsets (``_bitset``; both sides then share
+    one dictionary), else by one single-key sort of (pair, per-batch token
+    rank): each side is a set, so an adjacent duplicate key is one common
+    token."""
+    (lids, loff, lflat), (rids, roff, rflat) = left, right
+    li, ri = lids.get_indexer(lv), rids.get_indexer(rv)
+    keep = (li >= 0) & (ri >= 0)
+    lv, rv, li, ri = lv[keep], rv[keep], li[keep], ri[keep]
+    lsz, rsz = loff[li + 1] - loff[li], roff[ri + 1] - roff[ri]
+    if min_score is not None:
+        keep = _np_set_similarity(np.minimum(lsz, rsz), lsz, rsz, sim) >= min_score
+        lv, rv, li, ri, lsz, rsz = (a[keep] for a in (lv, rv, li, ri, lsz, rsz))
+    n = len(lv)
+    if bits is not None:
+        common = _POPCNT[(bits[li] & bits[ri]).view(np.uint8)].sum(axis=1, dtype=np.int64)
+    else:
+        toks = np.concatenate([_runs(lflat, loff, li, lsz), _runs(rflat, roff, ri, rsz)])
+        _, rank = np.unique(toks, return_inverse=True)
+        v = int(rank.max(initial=0)) + 1
+        key = np.repeat(np.tile(np.arange(n), 2), np.concatenate([lsz, rsz])) * v + rank
+        if n * v < 2**31:
+            key = key.astype(np.int32)  # the narrower sort is ~3x faster
+        key.sort()
+        common = np.bincount(key[1:][key[1:] == key[:-1]] // v, minlength=n)
+    score = _np_set_similarity(common, lsz, rsz, sim)
+    if min_score is not None:
+        keep = score >= min_score
+        lv, rv, score = lv[keep], rv[keep], score[keep]
+    return lv, rv, score
+
+
+def _collect_dictionary(hashed: DataFrame, max_rows: int | None):
+    """The hashed token table collected to the driver as a ``_token_csr``
+    dictionary, or None when it is over ``max_rows`` rows or
+    ``_DICT_MAX_BYTES``. The collect is itself bounded to ``max_rows + 1``
+    rows and the caps are checked on what it collected: the probe stats
+    that routed here are cached per plan and undershoot if the files grew.
+    ``max_rows=None`` collects the whole table and checks no cap."""
+    if max_rows is None:
+        return _token_csr(hashed.toArrow())
+    d = _token_csr(hashed.limit(max_rows + 1).toArrow())
+    n_docs = len(d[0])
+    if n_docs > max_rows or d[2].size * 8 + n_docs * _DICT_DOC_OVERHEAD > _DICT_MAX_BYTES:
+        return None
+    return d
+
+
+def _bitset(d):
+    """Per-doc token bitsets (n_docs x W uint64 words over the dense ranks
+    of the exact vocabulary) of dictionary ``d``, or None when they bust
+    the bitset caps. The popcount kernel is O(pairs x W) with no sort — it
+    wins by orders of magnitude while W stays small; past the caps the
+    sort kernel or the jvm join takes over."""
+    _, offsets, flat = d
+    vocab, rank = np.unique(flat, return_inverse=True)
+    n_docs, w = offsets.size - 1, (max(vocab.size, 1) + 63) // 64
+    if w > _BITSET_MAX_WORDS or n_docs * w * 8 > _BITSET_MAX_BYTES:
+        return None
+    bits = np.zeros(n_docs * w, dtype=np.uint64)
+    word = np.repeat(np.arange(n_docs) * w, np.diff(offsets)) + (rank >> 6)
+    np.bitwise_or.at(bits, word, np.left_shift(np.uint64(1), (rank & 63).astype(np.uint64)))
+    return bits.reshape(n_docs, w)
+
+
+def _score_pairs_arrow(pairs: DataFrame, d, sim: str, min_score, bits) -> DataFrame:
+    """Arrow-batched pair scorer over the broadcast dictionary ``d`` (and
+    its ``bits``, when the bitset kernel applies): only (left_id, right_id)
+    crosses Arrow, and each batch is one ``_score_batch`` call with ``d`` on
+    both sides."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    spark = pairs.sparkSession
-    if max_rows is None:
-        rows = hashed.collect()
-    else:
-        rows = hashed.limit(max_rows + 1).collect()
-        actual_bytes = (
-            sum(len(r[1] or ()) for r in rows) * 8 + len(rows) * _DICT_DOC_OVERHEAD
-        )
-        if len(rows) > max_rows or actual_bytes > _DICT_MAX_BYTES:
-            if strict:
-                raise ValueError(
-                    f"engine='arrow' token dictionary busts its caps on the "
-                    f"collected data ({len(rows)} rows / ~{actual_bytes} bytes; "
-                    f"caps {max_rows} rows / {_DICT_MAX_BYTES} bytes) — the "
-                    "table grew past the probed stats; use engine='jvm' or "
-                    "broadcast_rows=None to accept an unbounded collect"
-                )
-            return _OVER_CAP
-    n_docs = len(rows)
-    ids = [r[0] for r in rows]
-    arrs = [np.asarray(r[1] or (), dtype=np.int64) for r in rows]
-    lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=n_docs)
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    flat = np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-
-    # rank-encode against the global vocabulary (known at dictionary-build
-    # time): ranks are dense [0, V), which unlocks the two batch kernels
-    vocab = np.unique(flat)
-    V = max(int(vocab.size), 1)
-    ranks = np.searchsorted(vocab, flat).astype(np.int64)
-    W = (V + 63) // 64
-    # mode choice: the bitset kernel is O(pairs x W) with no sort — it wins
-    # while W stays small; past the caps the single-key sort kernel takes
-    # over (this host: 65k-pair batch = ~4ms at W=1 vs ~2s sorted)
-    use_bitset = W <= _BITSET_MAX_WORDS and n_docs * W * 8 <= _BITSET_MAX_BYTES
-    if not use_bitset and not allow_sort:
-        return None
-    if use_bitset:
-        bits = np.zeros(n_docs * W, dtype=np.uint64)
-        word = np.repeat(np.arange(n_docs, dtype=np.int64) * W, lens) + (ranks >> 6)
-        bitval = (np.uint64(1) << (ranks & 63).astype(np.uint64))
-        order = np.argsort(word, kind="stable")
-        ws, vs = word[order], bitval[order]
-        starts = np.flatnonzero(np.r_[True, ws[1:] != ws[:-1]])
-        if ws.size:
-            bits[ws[starts]] = np.bitwise_or.reduceat(vs, starts)
-        bits = bits.reshape(n_docs, W)
-        payload = ("bitset", ids, bits, lens)
-    else:
-        payload = ("sort", ids, ranks, offsets, V)
-    bc = spark.sparkContext.broadcast(payload)
-
+    if bits is not None:
+        d = (d[0], d[1], d[2][:0])  # the bitsets replace the token runs
+    bc = pairs.sparkSession.sparkContext.broadcast((d, bits))
     out_schema = StructType(
         [
             StructField("left_id", pairs.schema["left_id"].dataType),
@@ -252,72 +260,15 @@ def _score_pairs_arrow(
     )
 
     def batches(it):
-        import numpy as np
         import pandas as pd
 
-        mode, ids_, *rest = bc.value
-        index = pd.Index(ids_)
-        if mode == "bitset":
-            bits_, doc_lens = rest
-            popcnt = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
-        else:
-            ranks_, offsets_, v_ = rest
-            doc_lens = np.diff(offsets_)
+        d_, bits_ = bc.value
         for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            lv, rv = pdf["left_id"].values, pdf["right_id"].values
-            li = index.get_indexer(lv)
-            ri = index.get_indexer(rv)
-            # pairs whose doc_id is absent from the token table are dropped —
-            # identical to the jvm engine's inner join semantics
-            present = (li >= 0) & (ri >= 0)
-            if not present.all():
-                lv, rv, li, ri = lv[present], rv[present], li[present], ri[present]
-                n = len(lv)
-                if n == 0:
-                    continue
-            lsz, rsz = doc_lens[li], doc_lens[ri]
-            if min_score is not None:
-                # exact upper bound: score is maximal at c = min(|A|,|B|) —
-                # prune pairs that cannot pass before any intersection work
-                m = np.minimum(lsz, rsz).astype(np.float64)
-                keep = _np_set_similarity(m, lsz.astype(np.float64), rsz.astype(np.float64), sim) >= min_score
-                if not keep.all():
-                    lv, rv = lv[keep], rv[keep]
-                    li, ri, lsz, rsz = li[keep], ri[keep], lsz[keep], rsz[keep]
-                    n = len(lv)
-                    if n == 0:
-                        continue
-            if mode == "bitset":
-                common = popcnt[(bits_[li] & bits_[ri]).view(np.uint8)].sum(
-                    axis=1, dtype=np.int64
-                )
-            else:
-                # single-key sort: key = pair * V + token_rank; each side is a
-                # set, so an adjacent duplicate == one common token
-                idx2 = np.concatenate([li, ri])
-                seg_len = np.concatenate([lsz, rsz])
-                pid = np.repeat(np.concatenate([np.arange(n), np.arange(n)]), seg_len)
-                cl = np.cumsum(seg_len)
-                within = np.arange(cl[-1], dtype=np.int64) - np.repeat(cl - seg_len, seg_len)
-                toks = ranks_[np.repeat(offsets_[idx2], seg_len) + within]
-                key = pid * v_ + toks
-                if n * v_ < 2**31:
-                    key = key.astype(np.int32)  # 3x faster sort on this host
-                key.sort()
-                dup = key[1:] == key[:-1]
-                common = np.bincount(
-                    (key[1:][dup] // v_).astype(np.int64), minlength=n
-                )
-            score = _np_set_similarity(
-                common.astype(np.float64), lsz.astype(np.float64), rsz.astype(np.float64), sim
+            lv, rv, score = _score_batch(
+                pdf["left_id"].values, pdf["right_id"].values, d_, d_, sim, min_score, bits_
             )
-            if min_score is not None:
-                keep = score >= min_score
-                lv, rv, score = lv[keep], rv[keep], score[keep]
-            yield pd.DataFrame({"left_id": lv, "right_id": rv, "score": score})
+            if len(score):
+                yield pd.DataFrame({"left_id": lv, "right_id": rv, "score": score})
 
     return pairs.select("left_id", "right_id").mapInPandas(batches, out_schema)
 
@@ -334,15 +285,17 @@ def score_pairs(
     """Score candidate (left_id, right_id) pairs with exact set similarity.
 
     Tokens ride as hashed 64-bit ids (``tk.hash_token_set``) — primitive
-    long arrays instead of string arrays everywhere downstream.
+    long arrays instead of string arrays everywhere downstream. The arrow
+    and bucketed engines share one numpy kernel, ``_score_batch``, over
+    ``_token_csr`` dictionaries; all engines return bit-identical scores.
 
     ``engine``:
 
-    * ``"arrow"`` — broadcast-token-dictionary scorer (``_score_pairs_arrow``):
-      only pair ids cross Arrow, intersection counts are batched numpy
-      (lexsort + adjacent-duplicate count). Measured ~2x the jvm path at
-      12.5M pairs / local[32] even before the min_score prefilter; requires
-      the token table under ``broadcast_rows``.
+    * ``"arrow"`` — the token table is collected once to the driver
+      (bounded by ``broadcast_rows`` and ``_DICT_MAX_BYTES``; ValueError
+      when over either) and broadcast; only pair ids cross Arrow. Counts
+      common tokens by bitset popcount while the exact vocabulary fits
+      the bitset caps, else by a per-batch sort.
     * ``"jvm"`` — join the token arrays onto the pairs and
       ``size(array_intersect(...))``. The generic pure-DataFrame path:
       beyond the broadcast cap it is two shuffle joins whose intermediate
@@ -355,102 +308,80 @@ def score_pairs(
       buckets side-band from the ``write_token_buckets`` store — no token
       bytes in any shuffle, no driver collect, no size caps. Requires
       ``bucket_path``.
-    * ``"auto"`` — arrow under the cap; beyond it, bucketed when
-      ``bucket_path`` is given (the production layout always has the
-      stage-store bucket table), else jvm.
+    * ``"auto"`` — under the cap, arrow with the bitset kernel when the
+      exact vocabulary fits the bitset caps, else the jvm join with a
+      broadcast hint (the sort kernel loses to it at those sizes). Over
+      the cap (or with ``broadcast_rows=None``), bucketed when
+      ``bucket_path`` is given and the ids are strings (the bucketed engine
+      emits string ids), else the jvm join with no hint.
 
     ``min_score``: when set, only pairs with score >= min_score are
     returned, and an exact size-bound prefilter (score at c = min(|A|,|B|)
     is the achievable maximum) prunes un-passable pairs BEFORE any
-    intersection work — pure codegen in the jvm path, vectorized numpy in
-    the arrow path.
+    intersection work — pure codegen in the jvm path, numpy in the kernel.
 
     Probe budget (what runs at CONSTRUCTION time, before any action on the
     returned plan):
 
-    * ``engine='jvm'`` — ZERO jobs; broadcast-vs-shuffle is left to AQE's
-      runtime statistics (the session enables adaptive execution).
+    * ``engine='jvm'`` or ``'bucketed'`` — ZERO jobs; for jvm,
+      broadcast-vs-shuffle is left to AQE's runtime statistics.
     * ``engine='auto'`` with a cap — ONE job, bounded to
       ``broadcast_rows + 1`` docs, computing (doc count, token count,
       approx vocabulary) in a single pass; cached per (session, token-table
       plan), so repeated constructions over the same table probe once.
-      Auto additionally collects the dictionary when it picks arrow (that
-      collect is the point of the arrow engine).
-    * ``engine='arrow'`` with a cap — ZERO probe jobs: the dictionary
-      collect is itself bounded to ``broadcast_rows + 1`` rows and raises
-      on the ground-truth row/byte caps (strict mode) — a separate probe
-      would be a duplicated scan answering the same question.
-    * ``engine='arrow'`` with ``broadcast_rows=None`` — caller accepts an
-      unbounded driver collect (no probe, no caps).
-
-    Both caps are enforced in BYTES, not rows: the broadcast dictionary
-    must fit ``_DICT_MAX_BYTES`` and the bitset buffer ``_BITSET_MAX_BYTES``.
-    Under auto, if the exact vocabulary (known only after the collect)
-    busts the bitset caps, the jvm plan is used — never the sort kernel,
-    which loses to the jvm join at exactly those sizes.
+      When those stats fit the caps, auto also collects the dictionary,
+      which re-checks the row/byte caps on the collected data: if the
+      cached stats undershot, the table is proven over the cap and the
+      plan falls through as over-cap.
+    * ``engine='arrow'`` — ZERO probe jobs, just the dictionary collect
+      (bounded to ``broadcast_rows + 1`` rows; ``broadcast_rows=None``
+      accepts an unbounded collect with no caps).
     """
     if engine not in ("auto", "jvm", "arrow", "bucketed"):
         raise ValueError(
             f"unknown engine {engine!r} (one of auto/jvm/arrow/bucketed)"
         )
-    if engine == "bucketed":
-        if bucket_path is None:
-            raise ValueError("engine='bucketed' requires bucket_path")
+    if engine == "bucketed" and bucket_path is None:
+        raise ValueError("engine='bucketed' requires bucket_path")
+    hashed = tokened.select("doc_id", tk.hash_token_set(F.col("tokens")).alias("_h"))
+    if engine == "arrow":
+        d = _collect_dictionary(hashed, broadcast_rows)
+        if d is None:
+            raise ValueError(
+                f"engine='arrow' token dictionary is over its caps "
+                f"({broadcast_rows} rows / {_DICT_MAX_BYTES} bytes); use "
+                "engine='jvm' or broadcast_rows=None to accept an unbounded collect"
+            )
+        return _score_pairs_arrow(pairs, d, sim, min_score, _bitset(d))
+
+    hint_broadcast = False
+    if engine == "auto" and broadcast_rows is not None:
+        stats = _token_stats(hashed, broadcast_rows)
+        hint_broadcast = (
+            stats["n_docs"] <= broadcast_rows and stats["dict_bytes"] <= _DICT_MAX_BYTES
+        )
+        w_est = (int(stats["v_est"] * 1.2) + 63) // 64
+        if (
+            hint_broadcast
+            and w_est <= _BITSET_MAX_WORDS
+            and stats["n_docs"] * w_est * 8 <= _BITSET_MAX_BYTES
+        ):
+            d = _collect_dictionary(hashed, broadcast_rows)
+            # None: the cached stats undershot and the table is proven over
+            # the cap — never force-broadcast it below
+            hint_broadcast = d is not None
+            bits = None if d is None else _bitset(d)
+            if bits is not None:
+                return _score_pairs_arrow(pairs, d, sim, min_score, bits)
+    if engine == "bucketed" or (
+        engine == "auto"
+        and not hint_broadcast
+        and bucket_path is not None
+        and isinstance(pairs.schema["left_id"].dataType, StringType)
+    ):
         from .bucketed import score_pairs_bucketed
 
         return score_pairs_bucketed(pairs, bucket_path, sim, min_score=min_score)
-    hashed = tokened.select("doc_id", tk.hash_token_set(F.col("tokens")).alias("_h"))
-
-    hint_broadcast = False
-    # explicit engine='arrow' with a cap needs NO separate probe job: the
-    # dictionary collect below is itself bounded to max_rows + 1 and
-    # strict=True raises on the ground-truth row/byte caps — a probe here
-    # would be a duplicated scan answering the same question
-    if engine == "auto":
-        engine = "jvm"
-        if broadcast_rows is not None:
-            stats = _token_stats(hashed, broadcast_rows)
-            under = (
-                stats["n_docs"] <= broadcast_rows
-                and stats["dict_bytes"] <= _DICT_MAX_BYTES
-            )
-            hint_broadcast = under
-            w_est = (int(stats["v_est"] * 1.2) + 63) // 64
-            if (
-                under
-                and w_est <= _BITSET_MAX_WORDS
-                and stats["n_docs"] * w_est * 8 <= _BITSET_MAX_BYTES
-            ):
-                out = _score_pairs_arrow(
-                    pairs, hashed, sim, min_score, allow_sort=False,
-                    max_rows=broadcast_rows,
-                )
-                if out is _OVER_CAP:
-                    # the probe's cached stats undershot: the actually
-                    # collected dictionary busted the caps, so the table is
-                    # proven over-cap — do NOT force-broadcast it below
-                    hint_broadcast = False
-                elif out is not None:
-                    return out
-        if not hint_broadcast and bucket_path is not None:
-            # over the broadcast cap (or cap disabled) with a bucket store
-            # available: the bucketed engine is the scale default — the jvm
-            # two-shuffle join would move a token array per pair. Guarded on
-            # string ids so auto can never silently change output types
-            # (the bucketed engine emits string ids by contract).
-            from pyspark.sql.types import StringType
-
-            if isinstance(pairs.schema["left_id"].dataType, StringType):
-                from .bucketed import score_pairs_bucketed
-
-                return score_pairs_bucketed(
-                    pairs, bucket_path, sim, min_score=min_score
-                )
-    if engine == "arrow":
-        return _score_pairs_arrow(
-            pairs, hashed, sim, min_score, allow_sort=True,
-            max_rows=broadcast_rows, strict=True,
-        )
 
     lt = hashed.select(
         F.col("doc_id").alias("left_id"),

@@ -15,6 +15,17 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM, capped at 48g: the driver JVM (and,
+    in local mode, every task) must leave room for the Python UDF workers
+    and the OS, or the kernel OOM-kills it on a small host."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1, min(48, total // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "cfb_spark",
     cpus: int | None = None,
@@ -44,7 +55,10 @@ def get_spark(
         # per-batch overhead in the numpy scorers (pair scoring, minhash
         # signatures); 64k keeps a scoring batch ~tens of MB in flight
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

@@ -414,19 +414,30 @@ def read_entity_profiles(
     The staged parquet is REUSED when it already exists (pass
     ``overwrite=True`` to force reconversion) — repeated reads must not
     re-pay the driver-side stream parse. ``staging_path`` defaults to a
-    deterministic per-source file under the system temp dir, NOT next to
-    the source: dataset directories are commonly read-only."""
+    per-source file under the system temp dir, NOT next to the source
+    (dataset directories are commonly read-only), named by a digest of the
+    source's path, mtime and size, so a modified source converts again.
+    The conversion writes a temporary file that replaces the staged one
+    only on success, so a crashed conversion is never served."""
     import hashlib
     import tempfile
 
     if staging_path is None:
-        digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:12]
+        st = os.stat(path)
+        key = f"{os.path.abspath(path)}:{st.st_mtime_ns}:{st.st_size}"
+        digest = hashlib.md5(key.encode()).hexdigest()[:12]
         staging_path = os.path.join(
             tempfile.gettempdir(),
             f"javaser_{os.path.basename(path)}_{digest}.parquet",
         )
     if overwrite or not os.path.exists(staging_path):
-        profiles_to_parquet(path, staging_path)
+        tmp = f"{staging_path}.tmp-{os.getpid()}"
+        try:
+            profiles_to_parquet(path, tmp)
+            os.replace(tmp, staging_path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
     return spark.read.parquet(staging_path)
 
 

@@ -9,6 +9,7 @@ Run as a subprocess per level (fresh JVM, no warm-cache bleed):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -17,6 +18,15 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+
+def _input_digest(path: str) -> str:
+    """Digest of the input path and its file listing (names, sizes, mtimes)."""
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, names in os.walk(path) for f in names
+    )
+    listing = [(f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files]
+    return hashlib.md5(repr((os.path.abspath(path), listing)).encode()).hexdigest()[:12]
 
 
 def main() -> None:
@@ -150,7 +160,9 @@ def main() -> None:
         )
         bucket_path = os.path.join(
             os.environ.get("SPARK_GRAFT_BUCKET_DIR", "/root/spark-buckets"),
-            f"tokens_{n_docs}_{n_buckets}",
+            # the input's digest in the name: a regenerated fixture with the
+            # same doc count must not score against a stale store
+            f"tokens_{n_docs}_{n_buckets}_{_input_digest(path)}",
         )
         t0 = time.perf_counter()
         from continuousfilteringbenchmark_spark.plans.bucketed import (

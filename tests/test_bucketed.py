@@ -63,13 +63,14 @@ def test_unknown_ids_dropped_like_inner_join(spark, store):
     assert BK.score_pairs_bucketed(pairs, path).count() == 0
 
 
-def test_diagonal_cell_and_cache_eviction(spark, store):
+def test_diagonal_cell_and_cache_eviction(spark, store, monkeypatch):
     """Same-bucket (diagonal) cells reuse one parsed dictionary; a tiny LRU
     cap must only cost re-reads, never change results."""
     tokened, path, pairs_path = store
     pairs = spark.read.parquet(pairs_path)
     jvm = score_pairs(pairs, tokened, "dice", engine="jvm", min_score=0.6)
-    got = BK.score_pairs_bucketed(pairs, path, "dice", min_score=0.6, cache_max=1)
+    monkeypatch.setattr(BK, "_BUCKET_CACHE_MAX", 1)
+    got = BK.score_pairs_bucketed(pairs, path, "dice", min_score=0.6)
     assert _rows(got) == _rows(jvm)
 
 
@@ -84,12 +85,13 @@ def test_plan_has_single_id_only_exchange(spark, store):
     assert "_h" not in plan  # no token column anywhere in the plan
 
 
-def test_kernel_chunking(spark, store):
+def test_kernel_chunking(spark, store, monkeypatch):
     """Forcing many sub-batches per cell must not change a single bit."""
     tokened, path, pairs_path = store
     pairs = spark.read.parquet(pairs_path)
     base = _rows(BK.score_pairs_bucketed(pairs, path, min_score=0.5))
-    tiny = BK.score_pairs_bucketed(pairs, path, min_score=0.5, kernel_chunk=7)
+    monkeypatch.setattr(BK, "_KERNEL_CHUNK", 7)
+    tiny = BK.score_pairs_bucketed(pairs, path, min_score=0.5)
     assert _rows(tiny) == base
 
 
@@ -107,3 +109,20 @@ def test_score_pairs_dispatch_and_guard(spark, store):
     assert _rows(via_api) == _rows(direct)
     with pytest.raises(ValueError, match="bucket_path"):
         score_pairs(pairs, tokened, engine="bucketed")
+
+
+def test_overwritten_store_never_served_stale(spark, dirty, tmp_path):
+    """Rewriting a store at the same path with different docs must not let
+    a reused python worker serve the previous store's parsed buckets."""
+    from continuousfilteringbenchmark_spark.fixtures import dirty_corpus
+
+    path = str(tmp_path / "tokens")
+    for corpus in (dirty, dirty_corpus(spark, n_entities=150, seed=7)):
+        tokened = docs_with_tokens(corpus.docs, side_from_prefix=False)
+        BK.write_token_buckets(tokened, path, n_buckets=4)
+        ids = tokened.select("doc_id")
+        pairs = ids.toDF("left_id").crossJoin(ids.toDF("right_id")).where(
+            F.col("left_id") < F.col("right_id")
+        )
+        jvm = score_pairs(pairs, tokened, "jaccard", engine="jvm")
+        assert _rows(BK.score_pairs_bucketed(pairs, path)) == _rows(jvm)

@@ -82,6 +82,37 @@ def test_spark_sources(spark, tmp_path):
     assert sorted((r.left_id, r.right_id) for r in gt.collect()) == [(0, 1), (2, 3)]
 
 
+
+def test_default_staging_follows_source_changes(spark, tmp_path, monkeypatch):
+    """The default staging file is keyed by the source's mtime and size: an
+    unchanged source reuses it, a modified one converts again, and a failed
+    conversion leaves nothing behind to be served."""
+    import shutil
+    import tempfile
+
+    import pytest
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = tmp_path / "profiles.ser"
+    shutil.copy(PROFILES, src)
+    calls = []
+    convert = javaser.profiles_to_parquet
+    monkeypatch.setattr(
+        javaser, "profiles_to_parquet", lambda p, out: calls.append(p) or convert(p, out)
+    )
+    assert javaser.read_entity_profiles(spark, str(src)).count() == 4
+    assert javaser.read_entity_profiles(spark, str(src)).count() == 4
+    assert len(calls) == 1
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert javaser.read_entity_profiles(spark, str(src)).count() == 4
+    assert len(calls) == 2
+    src.write_bytes(b"\x00\x01\x02\x03")
+    with pytest.raises(ValueError, match="not a Java serialization stream"):
+        javaser.read_entity_profiles(spark, str(src))
+    assert len(calls) == 3
+    assert len(list(tmp_path.glob("javaser_*"))) == 2  # the two good stagings
+
 def test_rejects_non_stream(tmp_path):
     import pytest
 

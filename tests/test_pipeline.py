@@ -91,6 +91,21 @@ def test_score_pairs_engines_identical(cc_corpus, monkeypatch):
     assert got == expected
 
 
+
+def test_explicit_arrow_over_row_cap_raises(cc_corpus):
+    """engine='arrow' with a row cap below the doc count refuses the
+    collect instead of silently routing elsewhere."""
+    from continuousfilteringbenchmark_spark.operators import blocking as B
+    from continuousfilteringbenchmark_spark.plans.pipeline import docs_with_tokens, score_pairs
+
+    tokened = docs_with_tokens(cc_corpus.docs, side_from_prefix=True)
+    pairs = B.pairs_from_blocks(
+        B.build_blocks(tokened, B.BlockingConfig(clean_clean=True)), clean_clean=True
+    )
+    n_docs = tokened.count()
+    with pytest.raises(ValueError, match="over its caps"):
+        score_pairs(pairs, tokened, "jaccard", engine="arrow", broadcast_rows=n_docs - 1)
+
 def test_score_pairs_construction_job_budget(cc_corpus, spark):
     """The documented probe budget is real: constructing (not executing) a
     score_pairs plan runs ZERO Spark jobs for engine='jvm', and at most ONE
